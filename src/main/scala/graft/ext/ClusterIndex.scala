@@ -131,9 +131,10 @@ object ClusterIndex {
       retainVersions: Int = 2): Unit = {
     val v = currentVersion(spark, dir, name).getOrElse(0) + 1
     graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
-    Clusters.connectedComponents(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .write.mode("errorifexists").parquet(basePath(dir, name, v))
+    val cc = Clusters.connectedComponents(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+    try cc.write.mode("errorifexists").parquet(basePath(dir, name, v))
+    finally Checkpoints.release(cc)
     graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
     graft.io.VersionPointer.retain(
       spark, layoutDir(dir, name), v, retainVersions)
@@ -243,7 +244,10 @@ object ClusterIndex {
       // (r10, advisor)
       try changed.write.mode("overwrite")
         .parquet(deltaPath(dir, name, v, g))
-      finally (prior +: handles).foreach(_.unpersist())
+      finally {
+        (prior +: handles).foreach(_.unpersist())
+        (freshCk +: handles).foreach(Checkpoints.release)
+      }
     }
     val marker = new org.apache.hadoop.fs.Path(
       s"${foldsDir(dir, name, v)}/g$g.ok")
@@ -265,7 +269,8 @@ object ClusterIndex {
     val flat = resolved(spark, dir, name, v).localCheckpoint()
     graft.io.VersionPointer.dropDir(
       spark, s"${layoutDir(dir, name)}/v${v + 1}")
-    flat.write.mode("errorifexists").parquet(basePath(dir, name, v + 1))
+    try flat.write.mode("errorifexists").parquet(basePath(dir, name, v + 1))
+    finally Checkpoints.release(flat)
     graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
     graft.io.VersionPointer.retain(
       spark, layoutDir(dir, name), v + 1, retainVersions)

@@ -124,6 +124,8 @@ object Clusters {
       }
       converged = cur == prev
       prev = cur
+      // `next` is materialized and reads only its own blocks
+      Checkpoints.release(e)
       e = next
       it += 1
       System.err.println(

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,46 +79,36 @@ object Retrieval {
       .agg(count(lit(1)).as("c"))
     val dft = tc.join(broadcast(queryTerms.select("term").distinct), "term")
       .groupBy("term").agg(countDistinct(idCol).as("df"))
-    bm25ScoreFromPostings(tf, dft, dl, stats, idCol, k1, b)
+    tf.join(broadcast(dft), "term").join(dl, idCol)
+      .crossJoin(broadcast(stats))
+      .select(col("query_id"), col(idCol),
+        bm25Micro(col("c"), col("dl"), col("df"), col("n_docs"),
+          col("total"), k1, b).as("cmicro"))
+      .groupBy("query_id", idCol)
+      .agg(sum("cmicro").as("score_micro"))
   }
 
-  /** The BM25 formula off prepared relational inputs — the shared core
-    * of the in-memory path and the persisted [[SearchIndex]], so the
-    * maintained index provably computes the IDENTICAL double expression
-    * sequence (and therefore identical rounded micro-units):
-    *  - `tf`    (query_id, term, <idCol>, c) — query-pruned postings;
-    *  - `dft`   (term, df) — collection document frequencies;
-    *  - `dl`    (<idCol>, dl) — unit lengths;
-    *  - `stats` one row (n_docs, total).
+  /** One term's BM25 contribution to one unit's score, in integer
+    * micro-units — the single formula of the in-memory path and the
+    * persisted [[SearchIndex]], so the maintained index provably computes
+    * the IDENTICAL double expression sequence (and therefore identical
+    * rounded micro-units) whether the statistics arrive as joined columns
+    * or as driver-resolved literals:
+    *  - `c`     the term's count in the unit (times its multiplicity in
+    *            the query);
+    *  - `dl`    the unit length;
+    *  - `df`    the term's collection document frequency;
+    *  - `nDocs`, `total` the collection size and total length.
     */
-  private[ext] def bm25ScoreFromPostings(
-      tf: DataFrame,
-      dft: DataFrame,
-      dl: DataFrame,
-      stats: DataFrame,
-      idCol: String,
-      k1: Double,
-      b: Double): DataFrame = {
-    // a tf that already CARRIES `dl` (denormalized postings — the
-    // SearchIndex layout) skips the corpus-sized length join entirely
-    val withDl =
-      if (tf.columns.contains("dl")) tf.join(broadcast(dft), "term")
-      else tf.join(broadcast(dft), "term").join(dl, idCol)
-    val scored = withDl
-      .crossJoin(broadcast(stats))
-      .withColumn("avgdl", col("total").cast("double") / col("n_docs"))
-      .withColumn("idf",
-        log(lit(1.0) +
-          ((col("n_docs") - col("df")) + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("contrib",
-        col("idf") * ((col("c") * lit(k1 + 1)) /
-          (col("c") + lit(k1) * (lit(1 - b) +
-            lit(b) * (col("dl").cast("double") / col("avgdl"))))))
-      // integer micro-units: the per-doc SUM is exact and order-free
-      .withColumn("cmicro",
-        floor(col("contrib") * lit(1000000.0) + lit(0.5)).cast("long"))
-    scored.groupBy("query_id", idCol)
-      .agg(sum("cmicro").as("score_micro"))
+  private[ext] def bm25Micro(
+      c: Column, dl: Column, df: Column, nDocs: Column, total: Column,
+      k1: Double, b: Double): Column = {
+    val avgdl = total.cast("double") / nDocs
+    val idf = log(lit(1.0) + ((nDocs - df) + lit(0.5)) / (df + lit(0.5)))
+    val contrib = idf * ((c * lit(k1 + 1)) /
+      (c + lit(k1) * (lit(1 - b) + lit(b) * (dl.cast("double") / avgdl))))
+    // integer micro-units: the per-unit SUM is exact and order-free
+    floor(contrib * lit(1000000.0) + lit(0.5)).cast("long")
   }
 
   /** The rank cut shared by [[bm25TopK]] and [[SearchIndex.topK]]. */

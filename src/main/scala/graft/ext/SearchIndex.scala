@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted, incrementally-maintained BM25 search index — the artifact
   * form of [[Retrieval.bm25TopK]]: a query-time scorer should join
@@ -28,16 +29,21 @@ import org.apache.spark.sql.functions._
   *    per batch (n_docs, total_len) — readers sum both.
   * [[topK]] therefore answers IDENTICALLY to a one-shot
   * [[Retrieval.bm25TopK]] over the accumulated corpus — not just
-  * approximately: the scoring runs through the shared
-  * [[Retrieval.bm25ScoreFromPostings]] core, so the double expression
-  * sequence (idf, length normalization, micro-unit rounding) is the same
-  * code (q331 adjudicates against the from-scratch SQL replay).
+  * approximately: every term contribution runs through the shared
+  * [[Retrieval.bm25Micro]] formula, so the double expression sequence
+  * (idf, length normalization, micro-unit rounding) is the same code
+  * (q331 adjudicates against the from-scratch SQL replay).
   *
   * Scale shape: a query joins its (few) terms against the postings —
-  * per-term fanout is that term's df, the inverted-index property; df
-  * summing is restricted to query terms before aggregation; totals are
-  * one row per fold. Fold IO is delta-sized (sign only the fresh batch;
-  * nothing stored is read or rewritten).
+  * per-term fanout is that term's df, the inverted-index property. The
+  * collection statistics are resolved on the DRIVER by one scan that
+  * keeps only the query terms' termdf rows and the totals rows: at most
+  * (distinct query terms + 1) × (1 + committed folds) rows, never
+  * corpus-sized. They reach the scoring stage as literals, so a query
+  * runs one stats job plus one exchange on `query_id` (shared by the
+  * per-doc sum and the rank cut), with no broadcasts. Fold IO is
+  * delta-sized (sign only the fresh batch; nothing stored is read or
+  * rewritten).
   */
 object SearchIndex {
 
@@ -69,19 +75,22 @@ object SearchIndex {
 
   private val FoldMarkerRe = """g(\d+)\.ok""".r
 
-  // r10: memoized per-version artifact schemas + multi-path reads — see
-  // DedupIndex.readStored (schema-inferring reads each pay a footer job;
-  // artifact schemas are frozen per version).
+  // r10: memoized per-version artifact schemas — see DedupIndex.readStored
+  // (schema-inferring reads each pay a footer job). The three artifacts
+  // share one file schema per version; build and compact record it when
+  // they write a base, so a query never pays the footer job in the
+  // writing session.
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, StructType]()
 
-  private def readStored(
-      spark: SparkSession, schemaKey: String,
-      paths: Seq[String]): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(
-      schemaKey, p => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(paths: _*)
-  }
+  private def schemaKey(dir: String, name: String, v: Int): String =
+    s"${layoutDir(dir, name)}/v$v/sign"
+
+  /** Every batch writes a totals row, so the base's totals dir exists. */
+  private def signSchema(
+      spark: SparkSession, dir: String, name: String, v: Int): StructType =
+    schemaCache.computeIfAbsent(schemaKey(dir, name, v),
+      k => spark.read.parquet(s"$k/__what=totals").schema)
 
   private def committedFolds(
       spark: SparkSession, dir: String, name: String, v: Int): Seq[Long] = {
@@ -155,11 +164,17 @@ object SearchIndex {
     "termdf" -> Seq("term", "df"),
     "totals" -> Seq("n_docs", "total_len"))
 
+  /** Writes one batch; returns its file schema (parquet reads every
+    * column back nullable).
+    */
   private def writeBatch(
       postings: DataFrame, termdf: DataFrame,
-      totals: DataFrame, root: String, mode: String): Unit =
-    signedUnion(postings, termdf, totals)
-      .write.partitionBy("__what").mode(mode).parquet(s"$root/sign")
+      totals: DataFrame, root: String, mode: String): StructType = {
+    val u = signedUnion(postings, termdf, totals)
+    u.write.partitionBy("__what").mode(mode).parquet(s"$root/sign")
+    StructType(u.schema.filter(_.name != "__what")
+      .map(_.copy(nullable = true)))
+  }
 
   /** Sign + index `corpus` as version 1 (or N+1 — a rebuild), then apply
     * the retention window.
@@ -170,8 +185,10 @@ object SearchIndex {
     val v = currentVersion(spark, dir, name).getOrElse(0) + 1
     graft.io.VersionPointer.dropDir(spark, s"${layoutDir(dir, name)}/v$v")
     val (p, t, s, tkCache) = sign(corpus, idCol, textCol)
-    try writeBatch(p, t, s, s"${layoutDir(dir, name)}/v$v", "errorifexists")
-    finally tkCache.unpersist()
+    val sch =
+      try writeBatch(p, t, s, s"${layoutDir(dir, name)}/v$v", "errorifexists")
+      finally tkCache.unpersist()
+    schemaCache.put(schemaKey(dir, name, v), sch)
     graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v)
     graft.io.VersionPointer.retain(
       spark, layoutDir(dir, name), v, retainVersions)
@@ -206,25 +223,85 @@ object SearchIndex {
     ()
   }
 
+  /** The existing `__what=<what>` dirs of the base and the committed
+    * deltas of version `v`. A batch with no rows for an artifact (a fold
+    * of zero-token docs has no postings or termdf) writes no dir for it.
+    */
+  private def committedDirs(
+      spark: SparkSession, dir: String, name: String, v: Int,
+      whats: Set[String]): Seq[String] = {
+    val roots = s"${layoutDir(dir, name)}/v$v/sign" +:
+      committedFolds(spark, dir, name, v)
+        .map(g => s"${deltaPath(dir, name, v, g)}/sign")
+    val f = fs(spark, roots.head)
+    val names = whats.map(w => s"__what=$w")
+    roots.flatMap(r => f.listStatus(new org.apache.hadoop.fs.Path(r))
+      .map(_.getPath.getName).filter(names).map(n => s"$r/$n"))
+  }
+
   /** All committed rows of one artifact (base + committed deltas). */
   private def readCommitted(
       spark: SparkSession, dir: String, name: String, v: Int,
       what: String): DataFrame = {
     val cols = whatCols(what)
-    val roots = s"${layoutDir(dir, name)}/v$v/sign" +:
-      committedFolds(spark, dir, name, v)
-        .map(g => s"${deltaPath(dir, name, v, g)}/sign")
-    readStored(spark, s"${layoutDir(dir, name)}/v$v/sign/__what=$what",
-      roots.map(r => s"$r/__what=$what"))
-      .select(cols.head, cols.tail: _*)
+    val sch = signSchema(spark, dir, name, v)
+    val paths = committedDirs(spark, dir, name, v, Set(what))
+    val rows =
+      if (paths.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), sch)
+      else spark.read.schema(sch).parquet(paths: _*)
+    rows.select(cols.head, cols.tail: _*)
   }
+
+  /** The columns the statistics scan reads; their types are fixed by
+    * [[sign]], so the scan needs no schema inference.
+    */
+  private val statsSchema = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType),
+    StructField("n_docs", LongType), StructField("total_len", LongType)))
+
+  /** Collection statistics for `terms`: per-term df, document count and
+    * total length, summed over the base and the committed deltas as
+    * driver Longs (exact, like the SQL sums they replace). One scan job
+    * over the termdf and totals dirs, returning at most
+    * (terms + 1) × (1 + committed folds) rows.
+    */
+  private def termStats(
+      spark: SparkSession, dir: String, name: String, v: Int,
+      terms: Seq[String]): (Map[String, Long], Long, Long) = {
+    val rows = graft.conf.JobPhase(spark, "SearchIndex.topK.stats") {
+      spark.read.schema(statsSchema)
+        .parquet(committedDirs(spark, dir, name, v,
+          Set("termdf", "totals")): _*)
+        .filter(col("term").isin(terms: _*) || col("term").isNull)
+        .collect()
+    }
+    val (totals, dfs) = rows.partition(_.isNullAt(0))
+    (dfs.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _),
+      totals.map(_.getLong(2)).sum, totals.map(_.getLong(3)).sum)
+  }
+
+  /** A `string -> valueType` map literal: driver-resolved, query-sized
+    * data inlined into the plan, so no broadcast job ships it.
+    */
+  private def mapLit(entries: Seq[(String, Column)], valueType: DataType) =
+    map_from_arrays(
+      array(entries.map(e => lit(e._1)): _*).cast(ArrayType(StringType)),
+      array(entries.map(_._2): _*).cast(ArrayType(valueType)))
 
   /** BM25 top-`k` per query against the maintained index — the
     * [[Retrieval.bm25TopK]] output contract
     * (query_id, rank, <idCol>, score_micro), computed from summed
-    * per-batch statistics through the SHARED scoring core, so the answer
-    * is bit-identical to the one-shot operator over the accumulated
-    * corpus. `atVersion` time-travels to a retained historical version.
+    * per-batch statistics through the SHARED scoring formula, so the
+    * answer is bit-identical to the one-shot operator over the
+    * accumulated corpus. A term repeated within a query counts its
+    * multiplicity into the term frequency, as in the one-shot.
+    * `atVersion` time-travels to a retained historical version.
+    *
+    * The query terms are collected to the driver (a local frame collects
+    * without a job). Three jobs in all: the statistics scan, then the
+    * caller's action runs the postings scan into one exchange on
+    * `query_id` and the per-doc sum and rank cut after it.
     */
   def topK(
       spark: SparkSession, queryTerms: DataFrame, dir: String,
@@ -232,22 +309,34 @@ object SearchIndex {
       b: Double = 0.75, atVersion: Option[Int] = None): DataFrame = {
     val v = graft.io.VersionPointer.resolveRead(spark,
       layoutDir(dir, name), atVersion, s"search index '$name' at $dir")
-    val qt = broadcast(queryTerms.select(col("query_id"), col("term")))
-    // postings carry dl: the shared core skips the lengths join
-    val tf = readCommitted(spark, dir, name, v, "postings")
-      .join(qt, "term")
-      .select(col("query_id"), col("term"), col("doc_id").as(idCol),
-        col("c"), col("dl"))
-    // per-batch dfs SUM to collection dfs (disjoint doc sets); restrict
-    // to query terms before the aggregate
-    val dft = readCommitted(spark, dir, name, v, "termdf")
-      .join(broadcast(queryTerms.select("term").distinct), "term")
-      .groupBy("term").agg(sum("df").as("df"))
-    val stats = readCommitted(spark, dir, name, v, "totals")
-      .agg(sum("n_docs").as("n_docs"), sum("total_len").as("total"))
-    Retrieval.bm25RankCut(
-      Retrieval.bm25ScoreFromPostings(tf, dft, tf, stats, idCol, k1, b),
-      idCol, k)
+    // term -> query_id -> the term's multiplicity in that query
+    val asked = queryTerms.select(col("query_id"), col("term"))
+      .collect().toSeq.filterNot(_.isNullAt(1))
+      .groupBy(_.getString(1))
+      .map { case (t, rs) => t -> rs.groupMapReduce(_.get(0))(_ => 1L)(_ + _) }
+    val terms = asked.keys.toSeq.sorted
+    val (df, nDocs, total) = termStats(spark, dir, name, v, terms)
+    val askedBy = ArrayType(StructType(Seq(
+      StructField("query_id", queryTerms.schema("query_id").dataType),
+      StructField("qtf", LongType))))
+    val byTerm = mapLit(asked.toSeq.map { case (t, qs) =>
+      t -> array(qs.toSeq.map { case (q, n) => struct(lit(q), lit(n)) }: _*)
+    }, askedBy)
+    val dfOf = mapLit(df.toSeq.map { case (t, d) => t -> lit(d) }, LongType)
+    // postings carry dl: no lengths join. The exchange on query_id alone
+    // serves both the per-doc sum and the rank cut's window.
+    val scores = readCommitted(spark, dir, name, v, "postings")
+      .filter(col("term").isin(terms: _*))
+      .select(col("term"), col("doc_id"), col("c"), col("dl"),
+        explode(element_at(byTerm, col("term"))).as("q"))
+      .select(col("q.query_id").as("query_id"), col("doc_id").as(idCol),
+        Retrieval.bm25Micro(col("c") * col("q.qtf"), col("dl"),
+          element_at(dfOf, col("term")), lit(nDocs), lit(total), k1, b)
+          .as("cmicro"))
+      .repartition(col("query_id"))
+      .groupBy("query_id", idCol)
+      .agg(sum("cmicro").as("score_micro"))
+    Retrieval.bm25RankCut(scores, idCol, k)
   }
 
   /** Rewrite the accumulated artifacts into one base at version N+1
@@ -267,8 +356,11 @@ object SearchIndex {
       .localCheckpoint()
     graft.io.VersionPointer.dropDir(
       spark, s"${layoutDir(dir, name)}/v${v + 1}")
-    writeBatch(p, t, s, s"${layoutDir(dir, name)}/v${v + 1}",
-      "errorifexists")
+    val sch =
+      try writeBatch(p, t, s, s"${layoutDir(dir, name)}/v${v + 1}",
+        "errorifexists")
+      finally Seq(p, t, s).foreach(Checkpoints.release)
+    schemaCache.put(schemaKey(dir, name, v + 1), sch)
     graft.io.VersionPointer.commit(spark, layoutDir(dir, name), v + 1)
     graft.io.VersionPointer.retain(
       spark, layoutDir(dir, name), v + 1, retainVersions)

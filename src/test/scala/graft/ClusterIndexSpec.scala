@@ -103,4 +103,20 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
       ClusterIndex.labels(spark, dir, "d", atVersion = Some(1))
     }
   }
+
+  test("fold and compact leave no persisted or checkpointed RDD behind") {
+    val dir = tmpDir("clidx_leak")
+    ClusterIndex.build(spark, pairs((1L, 2L), (10L, 11L)), dir, "d")
+    def leftover(body: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      body
+      spark.sparkContext.getPersistentRDDs.keySet.diff(before).toSet
+    }
+    // a chain through both stored components takes several CC rounds
+    assert(leftover(ClusterIndex.fold(spark,
+      pairs((2L, 3L), (3L, 4L), (4L, 10L), (11L, 12L)), dir, "d").count())
+      .isEmpty)
+    assert(leftover(ClusterIndex.compact(spark, dir, "d")).isEmpty)
+    assert(lab(ClusterIndex.labels(spark, dir, "d")).values.toSet == Set(1L))
+  }
 }

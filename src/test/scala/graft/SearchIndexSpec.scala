@@ -100,4 +100,96 @@ class SearchIndexSpec extends AnyFunSuite with SparkSpec {
         atVersion = Some(1))
     }
   }
+
+  test("a fold of zero-token docs leaves later queries and compaction working") {
+    val dir = tmpDir("sidx_empty")
+    val a = docs(0L until 20L)
+    // every doc tokenizes to nothing: the batch writes a totals row only
+    val blank = Seq((50L, ""), (51L, "  ")).toDF("doc_id", "text")
+    SearchIndex.build(spark, a, dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, blank, dir, "s", "doc_id", "text")
+    val qt = queries.toDF("query_id", "term")
+    val oneShot = top(Retrieval.bm25TopK(
+      a.unionByName(blank), qt, "doc_id", "text", k = 5))
+    assert(top(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      == oneShot && oneShot.nonEmpty)
+    SearchIndex.compact(spark, dir, "s")
+    assert(top(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      == oneShot)
+    // an all-blank base: only folds contribute postings
+    val dir2 = tmpDir("sidx_empty_base")
+    SearchIndex.build(spark, blank, dir2, "s", "doc_id", "text")
+    SearchIndex.fold(spark, a, dir2, "s", "doc_id", "text")
+    assert(top(SearchIndex.topK(spark, qt, dir2, "s", "doc_id", k = 5))
+      == oneShot)
+  }
+
+  test("a term repeated within a query scores as in the one-shot") {
+    val dir = tmpDir("sidx_qtf")
+    val a = docs(0L until 20L)
+    val b = docs(20L until 35L)
+    SearchIndex.build(spark, a, dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, b, dir, "s", "doc_id", "text")
+    val qt = Seq((1, "alpha"), (1, "alpha"), (1, "beta0"), (2, "w3"),
+      (2, "w3"), (2, "w3"), (2, "alpha")).toDF("query_id", "term")
+    val oneShot = top(Retrieval.bm25TopK(
+      a.unionByName(b), qt, "doc_id", "text", k = 5))
+    assert(top(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5))
+      == oneShot && oneShot.nonEmpty)
+  }
+
+  /** `body`'s result and the descriptions of the jobs it submitted. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        // properties is null for jobs submitted without local properties
+        descs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+        ()
+      }
+    }
+    org.apache.spark.graftbench.BusFlush.flush(spark)
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try { val r = body; org.apache.spark.graftbench.BusFlush.flush(spark); r }
+      finally spark.sparkContext.removeSparkListener(l)
+    (out, descs.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("topK runs at most 3 jobs, one of them the labelled stats scan") {
+    val qt = queries.toDF("query_id", "term")
+    Seq(0, 1, 3).foreach { folds =>
+      val dir = tmpDir(s"sidx_jobs$folds")
+      SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+      (0 until folds).foreach { f =>
+        SearchIndex.fold(spark, docs((20L + 5 * f) until (25L + 5 * f)), dir,
+          "s", "doc_id", "text")
+      }
+      val sc = spark.sparkContext
+      sc.setJobDescription("caller")
+      val (got, jobs) =
+        try jobsOf(top(SearchIndex.topK(spark, qt, dir, "s", "doc_id", k = 5)))
+        finally {
+          // the stats scan's label is scoped: the caller's is restored
+          assert(sc.getLocalProperty("spark.job.description") == "caller")
+          sc.setJobDescription(null)
+        }
+      assert(got.nonEmpty)
+      assert(jobs.size <= 3, s"$folds folds: ${jobs.mkString(", ")}")
+      assert(jobs.count(_ == "SearchIndex.topK.stats") == 1,
+        s"$folds folds: ${jobs.mkString(", ")}")
+    }
+  }
+
+  test("compact leaves no persisted or checkpointed RDD behind") {
+    val dir = tmpDir("sidx_leak")
+    SearchIndex.build(spark, docs(0L until 20L), dir, "s", "doc_id", "text")
+    SearchIndex.fold(spark, docs(20L until 35L), dir, "s", "doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SearchIndex.compact(spark, dir, "s")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
 }
